@@ -59,6 +59,14 @@ object Bench {
         j => (pmod(xxhash64(col("seq"), j), lit(10000)) / 10000.0).cast("float"))
         .as("embedding"))
 
+  /** A number for the JSON lines: NaN and ±Inf (which JSON lacks) print
+    * as `null`; `digits` ≥ 0 fixes the decimals, formatted in
+    * `Locale.ROOT` so no default locale turns the point into a comma. */
+  private def jnum(x: Double, digits: Int = -1): String =
+    if (x.isNaN || x.isInfinite) "null"
+    else if (digits < 0) x.toString
+    else String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
+
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1200").toDouble
@@ -126,7 +134,7 @@ object Bench {
       256.0 / s
     } catch { case _: Throwable => -1.0 }
     def probeCtx: String =
-      f""","probe_st_ms":$probeStMs%.1f,"probe_wr_mbps":$probeWrMbps%.1f"""
+      s""","probe_st_ms":${jnum(probeStMs, 1)},"probe_wr_mbps":${jnum(probeWrMbps, 1)}"""
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     val attemptTimes = scala.collection.mutable
@@ -145,14 +153,14 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     def epochS: Long = System.currentTimeMillis() / 1000L
     def ctx: String =
-      f""","load":$loadAvg1m%.2f,"ts":$epochS%d,"elapsed":$elapsedS%.1f"""
+      s""","load":${jnum(loadAvg1m, 2)},"ts":$epochS,"elapsed":${jnum(elapsedS, 1)}"""
 
     def emitRow(name: String, makeup: Boolean = false): Unit = {
       val tr = attemptTimes.getOrElse(name,
           scala.collection.mutable.ArrayBuffer[Double]())
-        .map(t => f"$t%.4f").mkString("[", ",", "]")
+        .map(jnum(_, 4)).mkString("[", ",", "]")
       val mk = if (makeup) ""","makeup":true""" else ""
-      println(f"""{"row":"$name","sec":${results(name)}%.4f,"t_runs":$tr$mk$ctx}""")
+      println(s"""{"row":"$name","sec":${jnum(results(name), 4)},"t_runs":$tr$mk$ctx}""")
       Console.out.flush()
     }
     /** Record a completed row AND stream it to stdout immediately — the
@@ -317,7 +325,7 @@ object Bench {
              tr <- prevState.get(row)) {
           results(row) = tr.sec
           carriedRows += row
-          println(s"""{"row":"$row","sec":${tr.sec},"carried":true,"measured_gen":${tr.gen},"age":${curGen - tr.gen},"measured_ts":${tr.ts},"t_runs":[${tr.tRuns}]$ctx}""")
+          println(s"""{"row":"$row","sec":${jnum(tr.sec)},"carried":true,"measured_gen":${tr.gen},"age":${curGen - tr.gen},"measured_ts":${tr.ts},"t_runs":[${tr.tRuns}]$ctx}""")
           Console.out.flush()
         }
       }
@@ -334,7 +342,7 @@ object Bench {
         if (ranHere) {
           val tr = attemptTimes.getOrElse(row,
               scala.collection.mutable.ArrayBuffer[Double]())
-            .map(t => f"$t%.4f").mkString(",")
+            .map(jnum(_, 4)).mkString(",")
           sb.append(s"$row\t${results(row)}\t$tr\t$epochS\t$curGen\t$g\n")
         } else prevState.get(row).foreach { t =>
           sb.append(s"$row\t${t.sec}\t${t.tRuns}\t${t.ts}\t${t.gen}\t$g\n")
@@ -483,7 +491,7 @@ object Bench {
 
     def emitSummaryAndStop(): Unit = {
       runMakeupPass() // pay owed second attempts from the leftover budget
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+      val qs = results.map { case (k, v) => "\"" + k + "\":" + jnum(v) }
         .mkString("{", ",", "}")
       // total stays comparable across rounds: the ann_* rows (added round
       // 2) are an index-build + search + recall-ratio block reported on
@@ -507,7 +515,7 @@ object Bench {
       // have parsed:null) — r10 verdict item 2. It still ships for
       // salvage/history: printed EARLY (not last) and written verbatim to
       // a sidecar file whose path the final line carries.
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"skipped":$sk,"min2_missed":$m2,"carried":$cr,"tail_gen":$curGen,"sf":"$sfDir"$probeCtx$ctx}"""
+      val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":$qs,"skipped":$sk,"min2_missed":$m2,"carried":$cr,"tail_gen":$curGen,"sf":"$sfDir"$probeCtx$ctx}"""
       println(full)
       val rowsFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_ROWS",
         "/root/repo/bench_rows.json")
@@ -523,8 +531,8 @@ object Bench {
       // decimals). The ann_*/x_* validation tail lives in the per-row
       // stream above, the full line, and the sidecar.
       val qsEssential = results.collect { case (k, v) if inTotal(k) =>
-        "\"" + k + "\":" + f"$v%.4f" }.mkString("{", ",", "}")
-      val totalStr = f"$total%.4f"
+        "\"" + k + "\":" + jnum(v, 4) }.mkString("{", ",", "}")
+      val totalStr = jnum(total, 4)
       println(s"""{"metric":"total","value":$totalStr,"unit":"sec","queries":$qsEssential,"sf":"$sfDir","n_rows":${results.size},"n_skipped":${skipped.size},"n_carried":${carriedRows.distinct.size},"n_min2_missed":${min2Missed.distinct.size},"tail_gen":$curGen,"rows_file":"$rowsFile"$probeCtx$ctx}""")
       Console.out.flush()
       spark.stop()
@@ -581,11 +589,11 @@ object Bench {
           // r10 optimization: maxIter 12 → 6 — measured-equal quantizer
           // on the frontier (recall@410 0.911 @ scanfrac 0.500 vs
           // 0.912 @ 0.496 at maxIter 12, same-session A/B), the fit is
-          // ~45% of the old build time. Rejected in the same sweep:
-          // random init at k=1024 (recall 0.847@0.401 — the seeding
-          // quality k-means|| buys DOES show at small k, unlike the 4k
-          // config), initSteps=1 (scanfrac blew up to 0.654 —
-          // unbalanced cells), fitSample 0.15 (recall 0.900).
+          // ~45% of the old build time; fitSample 0.15 gave recall
+          // 0.900. Those were spark.ml k-means|| fits. The driver-side
+          // k-means++ fit makes more balanced cells: recall 0.842 @
+          // scanfrac 0.401 at nProbe 410, 0.898 @ 0.500 at nProbe 512
+          // (4 cores; build and cached count 149 → 105 s).
           val idx0 = Ann.ivfBuild(stored, "id", "embedding", nCells = 1024,
             maxIter = 6, fitSampleFraction = 0.2, center = true)
           idx = idx0.copy(assigned = idx0.assigned.cache())
@@ -712,9 +720,8 @@ object Bench {
 
     // Finer-grained spilled index: 4096 cells + multiAssign=2 through
     // the map-only nearest_cells kernel. Round 10 re-fit the BUILD
-    // economics: initMode=random (k-means||'s oversampling passes +
-    // driver-local k-means++ on ~16k candidates dominated the fit at
-    // k=4096 and converged to a WORSE cost — measured 171.7k vs 175.4k),
+    // economics: initMode=random (seeding dominated the fit at k=4096
+    // and converged to a WORSE cost — measured 171.7k vs 175.4k),
     // maxIter=4, fitSample 0.15 — build 122.7 s → ~57 s. The random-init
     // quantizer lands on the same recall-vs-scan frontier at better
     // balance: nProbe=880 reads ~0.43 of the corpus for recall ~0.91

@@ -1303,8 +1303,9 @@ object SparkEntry {
   // the two (near-identical) vectors share NONE of their multiAssign=4
   // nearest cells, which needs 4 distinct centroids within ~4e-6 of the
   // twin's minimum centroid distance — and the quantizer fit is
-  // deterministic (seeded, layout-pinned sample), so the blocking result
-  // is the SAME every run: verified complete here, it stays complete.
+  // deterministic (hash-picked sample, seeded driver-side fit), so the
+  // blocking result is the SAME every run: verified complete here, it
+  // stays complete.
   private def q93(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings").select("vec_id", "embedding")
     val twins = e.where(col("vec_id") % 10 === 0).select(
@@ -1421,8 +1422,9 @@ object SparkEntry {
   // (vec_id % 4). This gates the whole fit — the order-free integer-ppm
   // centroid means AND the exact left-fold squared-euclidean argmin —
   // twice, since iteration 2's centroids depend on iteration 1's
-  // assignment. Cluster-side Lloyd is the scale path ivfBuild's sampled
-  // driver fit can't cover: every row participates in every update.
+  // assignment. Cluster-side Lloyd is the scale path ivfBuild's driver
+  // fit on a capped sample can't cover: every row participates in every
+  // update.
   private def q100(s: SparkSession, dir: String): DataFrame = {
     val r = Ann.kmeansLloyd(t(s, dir, "embeddings"), "vec_id", "embedding",
       k = 4, iters = 2, initCell = pmod(col("vec_id"), lit(4)))

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
+import graft.plans.TopKBuffer
 
 /** Approximate nearest-neighbor search — the 100 TB path for the
   * reference's ANN-backed `find` (its stores use HNSW, reference:
@@ -41,8 +42,15 @@ object Ann {
     if (index.normalized) l2_normalize(qcent) else qcent
   }
 
-  /** Build an IVF index: k-means (spark.ml, Lloyd's) over the embedding
-    * column as the coarse quantizer.
+  /** Build an IVF index: Lloyd's k-means ([[lloyd]]) on the driver over
+    * the [[hashSample]] of `fitSampleFraction`, capped at 256 rows per
+    * cell (FAISS's training cap; it bounds driver memory), then the
+    * map-only [[assignRows]] of every doc. One Spark job, and centroids
+    * bit-identical for any partitioning, input order or core count.
+    * `initMode = "k-means++"` seeds by D² sampling from
+    * `SplittableRandom(seed)`; `"random"` takes the first `nCells`
+    * distinct sample rows in hash order. A sample with fewer than
+    * `nCells` distinct vectors fails a `require`.
     *
     * For cosine search set `normalize=true` (default): vectors are
     * L2-normalized before clustering (spherical k-means geometry), so
@@ -51,94 +59,185 @@ object Ann {
     * A× the index size, but boundary docs (the IVF recall killer on
     * weakly-clustered data) stay reachable; honest scan fraction per
     * query is A·nProbe/nCells *when cells are balanced* — check with
-    * [[scanFraction]].
+    * [[scanFraction]]. Docs whose vector is null, non-finite or of
+    * another dimension get no cell and drop from the index.
     *
-    * `center=true` subtracts the corpus mean before normalizing — the
-    * same fix [[Dedup.embeddingPairsLsh]] needs: an all-positive corpus
-    * cones its directions around the diagonal, so uncentered spherical
-    * cells are wildly unbalanced (every query probes the same giant
-    * central cells and the real scan fraction is 3× the nominal one).
-    * Centered residual directions are isotropic → balanced cells →
+    * `center=true` subtracts the fit sample's mean before normalizing —
+    * the same fix [[Dedup.embeddingPairsLsh]] needs: an all-positive
+    * corpus cones its directions around the diagonal, so uncentered
+    * spherical cells are wildly unbalanced (every query probes the same
+    * giant central cells and the real scan fraction is 3× the nominal
+    * one). Centered residual directions are isotropic → balanced cells →
     * scan fraction ≈ nProbe/nCells, honestly. */
   def ivfBuild(docs: DataFrame, idCol: String, vecCol: String,
       nCells: Int, seed: Long = 42L, maxIter: Int = 20,
       fitSampleFraction: Double = 1.0, normalize: Boolean = true,
-      multiAssign: Int = 1, initSteps: Int = 2,
-      center: Boolean = false,
-      initMode: String = "k-means||"): IvfIndex = {
-    val meanOpt: Option[Seq[Double]] =
-      if (!center) None
+      multiAssign: Int = 1, center: Boolean = false,
+      initMode: String = "k-means++"): IvfIndex = {
+    require(nCells >= 1, s"nCells must be positive, got $nCells")
+    require(initMode == "k-means++" || initMode == "random",
+      s"initMode must be \"k-means++\" or \"random\", got \"$initMode\"")
+    val raw = hashSample(docs, idCol, vecCol, seed, fitSampleFraction,
+      256L * nCells)
+    require(raw.length >= nCells, s"ivfBuild: nCells = $nCells exceeds " +
+      s"the ${raw.length} usable fit-sample rows")
+    val dim = raw.head.length
+    require(raw.forall(_.length == dim),
+      s"ivfBuild: fit-sample vectors differ in dimension (first is $dim)")
+    // rounded to 1e-6 like every stored mean, so it reads back the same
+    val meanOpt = if (!center) None else Some(Seq.tabulate(dim) { i =>
+      math.rint(raw.foldLeft(0.0)(_ + _(i)) / raw.length * 1e6) / 1e6 })
+    // the probe-space transform with the arithmetic of [[probeVec]]
+    // (zip_with subtraction, then L2Normalize)
+    val mean = meanOpt.map(_.toArray)
+    val pts = raw.map { v =>
+      val x = mean.fold(v)(m => Array.tabulate(dim)(i => v(i) - m(i)))
+      if (!normalize) x
       else {
-        // mean over the (deterministic, hash-picked) fit sample — one
-        // cheap pass; rounded to 1e-6 so float summation-order noise can
-        // never flip a borderline cell assignment between runs
-        val raw = docs.select(col(vecCol).cast("array<double>").as("_rvec"))
-        val sel =
-          if (fitSampleFraction >= 1.0) raw
-          else docs.where(pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-            < (fitSampleFraction * 1000000L).toLong)
-            .select(col(vecCol).cast("array<double>").as("_rvec"))
-        val m = sel.select(array_to_vector(col("_rvec")).as("_f"))
-          .select(org.apache.spark.ml.stat.Summarizer.mean(col("_f")).as("_m"))
-          .head.getAs[org.apache.spark.ml.linalg.Vector](0).toArray
-        Some(m.map(x => math.rint(x * 1e6) / 1e6).toSeq)
+        val norm = x.foldLeft(0.0)((a, t) => a + t * t)
+        val inv = if (norm == 0.0) 0.0 else 1.0 / math.sqrt(norm)
+        x.map(_ * inv)
       }
-    def centered(c: Column): Column = meanOpt match {
-      case Some(m) => zip_with(c, typedLit(m), (a, b) => a - b)
-      case None => c
     }
-    val base =
-      if (normalize) docs.withColumn("_nvec", l2_normalize(centered(col(vecCol).cast("array<double>"))))
-      else docs.withColumn("_nvec", centered(col(vecCol).cast("array<double>")))
-    val feat = base.withColumn("_features", array_to_vector(col("_nvec")))
-    val fitOn = { // centroids from a sample: O(sample) fit, O(N) assign.
-      // Hash-sampled on the id, not df.sample: row-order independent, so
-      // the quantizer (and downstream recall) is stable run to run.
-      val sel =
-        if (fitSampleFraction >= 1.0) feat
-        else feat.where(pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-          < (fitSampleFraction * 1000000L).toLong)
-      // pin layout too: k-means|| init draws and float reduction order
-      // follow the input's partitioning/order, which follows source file
-      // listing — hash-repartition by id + local sort makes the fit
-      // deterministic regardless of how the corpus was laid out. Applied
-      // to BOTH branches so the default full-corpus fit is deterministic
-      // too; with a sample only the sample shuffles.
-      sel.repartition(64, col(idCol)).sortWithinPartitions(idCol)
-    }
-    // initMode="random" for LARGE nCells (≥ ~2k): k-means||'s
-    // oversampling passes + driver-local k-means++ on ~2·k·initSteps
-    // candidates dominate the fit there and buy nothing — measured r10
-    // at k=4096 on the uniform 1M corpus: random init fit 35.1 s vs
-    // 90.8 s AND a lower converged cost (171.7k vs 175.4k at equal
-    // maxIter). Keep the default for small k where seeding quality
-    // shows.
-    val model = new KMeans()
-      .setK(nCells).setSeed(seed).setMaxIter(maxIter).setInitSteps(initSteps)
-      .setInitMode(initMode)
-      .setFeaturesCol("_features").setPredictionCol("_cell")
-      .fit(fitOn)
+    // the first nCells distinct points in hash order: "random"'s seeds;
+    // with fewer, duplicate centroids would leave cells empty for good
+    val distinct = pts.iterator.map(_.toSeq).distinct.take(nCells).toArray
+    require(distinct.length == nCells, s"ivfBuild: nCells = $nCells exceeds " +
+      s"the ${distinct.length} distinct fit-sample vectors")
+    val init =
+      if (initMode == "random") distinct.map(_.toArray)
+      else kmeansPlusPlus(pts, nCells, seed)
+    val cents = lloyd(pts, init, maxIter).map(_.toSeq).toSeq
     val spark = docs.sparkSession
     import spark.implicits._
-    val centroids = spark.createDataset(
-      model.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray) })
+    val centroids = spark.createDataset(cents.zipWithIndex.map(_.swap))
       .toDF("_cell", "_center")
-    val assigned =
-      if (multiAssign <= 1) model.transform(feat).drop("_features", "_nvec")
-      else {
-        // nearest-m cells per doc via the compiled map-only kernel
-        // (centroid matrix as a codegen reference object) — zero
-        // shuffle. The former crossJoin(broadcast)+groupBy+top-k plan
-        // materialized N×K rows and fell back to a sort-based aggregate
-        // past the object-hash threshold (the r9 1M×4096 disk spill).
-        val cents = model.clusterCenters.map(_.toArray.toSeq).toSeq
-        feat.drop("_features")
-          .withColumn("_cell", explode(graft.functions.nearest_cells(
-            col("_nvec"), cents, cents.indices, multiAssign)))
-          .drop("_nvec")
-      }
-    IvfIndex(assigned, centroids, idCol, vecCol, nCells, multiAssign,
+    val index = IvfIndex(null, centroids, idCol, vecCol, nCells, multiAssign,
       normalize, meanOpt)
+    index.copy(assigned = assignRows(index, docs))
+  }
+
+  /** The fit sample of [[ivfBuild]] and [[pqTrain]], ONE collect: rows
+    * with `pmod(xxhash64(id, seed), 1e6) < fraction·1e6` and a non-null,
+    * finite vector, the first `limit` in (`xxhash64(id, seed)`, vector)
+    * order — hash-defined, so independent of the corpus layout. */
+  private def hashSample(docs: DataFrame, idCol: String, vecCol: String,
+      seed: Long, fraction: Double, limit: Long): Array[Array[Double]] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val filtered =
+      if (fraction >= 1.0) docs
+      else docs.where(pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
+        < (fraction * 1000000L).toLong)
+    filtered
+      .select(col(vecCol).cast("array<double>").as("_v"),
+        xxhash64(col(idCol), lit(seed)).as("_rk"))
+      // null elements, NaN (above +Inf in Spark's order) and ±Inf fail
+      .where(forall(col("_v"), x => abs(x) < lit(Double.PositiveInfinity)))
+      .orderBy("_rk", "_v").limit(math.min(limit, Int.MaxValue.toLong).toInt)
+      .select("_v").as[Array[Double]].collect() // primitive arrays, unboxed
+  }
+
+  /** k-means++ seeding (D² sampling) of `k` centroids from `pts`, driven
+    * by `SplittableRandom(seed)` — the exact form of what spark.ml's
+    * k-means|| approximates for distributed data. Points that coincide
+    * with a chosen centroid have weight 0; if all do, the next pick is
+    * uniform. */
+  private def kmeansPlusPlus(pts: Array[Array[Double]], k: Int,
+      seed: Long): Array[Array[Double]] = {
+    val rng = new java.util.SplittableRandom(seed)
+    val out = new Array[Array[Double]](k)
+    val d2 = Array.fill(pts.length)(Double.MaxValue)
+    out(0) = pts(rng.nextInt(pts.length))
+    for (c <- 1 until k) {
+      inChunks(pts.length)(p => d2(p) = math.min(d2(p), sqDist(pts(p), out(c - 1))))
+      var total = 0.0
+      var p = 0
+      while (p < d2.length) { total += d2(p); p += 1 }
+      p = 0
+      if (total > 0.0) {
+        val r = rng.nextDouble() * total
+        var acc = d2(0)
+        while (p < pts.length - 1 && acc <= r) { p += 1; acc += d2(p) }
+      } else p = rng.nextInt(pts.length)
+      out(c) = pts(p)
+    }
+    out
+  }
+
+  /** Lloyd's k-means on the driver, shared by [[ivfBuild]] and
+    * [[pqTrain]]: assignment ties go to the lowest centroid index, an
+    * empty cell keeps its centroid, the means accumulate in point order,
+    * and the loop stops at `maxIter` or when no assignment changes. The
+    * argmin is split over the driver's cores in fixed chunks; each
+    * point's result does not depend on the split, so the centroids are
+    * bit-identical at any core count. */
+  private def lloyd(pts: Array[Array[Double]], init: Array[Array[Double]],
+      maxIter: Int): Array[Array[Double]] = {
+    val k = init.length
+    val dim = init(0).length
+    var cent = init
+    // -1: the first pass always runs the mean update, even when every
+    // point's nearest initial centroid is index 0
+    val assign = Array.fill(pts.length)(-1)
+    var it = 0
+    var changed = true
+    while (it < maxIter && changed) {
+      val cs = cent
+      val moved = new java.util.concurrent.atomic.AtomicBoolean(false)
+      inChunks(pts.length) { p =>
+        val best = nearest(pts(p), cs)
+        if (assign(p) != best) { assign(p) = best; moved.set(true) }
+      }
+      changed = moved.get
+      if (changed) {
+        val sums = Array.ofDim[Double](k, dim)
+        val cnt = new Array[Int](k)
+        for (p <- pts.indices) {
+          val s = sums(assign(p)); val v = pts(p)
+          for (i <- 0 until dim) s(i) += v(i)
+          cnt(assign(p)) += 1
+        }
+        cent = Array.tabulate(k)(c =>
+          if (cnt(c) == 0) cs(c)
+          else { val s = sums(c); Array.tabulate(dim)(i => s(i) / cnt(c)) })
+      }
+      it += 1
+    }
+    cent
+  }
+
+  /** Squared euclidean distance, summed left to right. */
+  private def sqDist(v: Array[Double], c: Array[Double]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < v.length) { val t = v(i) - c(i); d += t * t; i += 1 }
+    d
+  }
+
+  /** Index of the nearest centroid (lowest index on ties). */
+  private def nearest(v: Array[Double], cents: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var c = 0
+    while (c < cents.length) {
+      val d = sqDist(v, cents(c))
+      if (d < bestD) { bestD = d; best = c }
+      c += 1
+    }
+    best
+  }
+
+  /** Runs `body(p)` for every p in [0, n), in fixed chunks of 512 spread
+    * over the common fork-join pool; `body` must only write index p. */
+  private def inChunks(n: Int)(body: Int => Unit): Unit = {
+    val chunk = 512
+    java.util.stream.IntStream.range(0, (n + chunk - 1) / chunk).parallel()
+      .forEach { b =>
+        var p = b * chunk
+        val end = math.min(n, p + chunk)
+        while (p < end) { body(p); p += 1 }
+      }
   }
 
   /** Incrementally index new docs into an existing IVF without
@@ -161,9 +260,10 @@ object Ann {
     * same `_cell` partitioning) without touching existing shards. */
   def assignRows(index: IvfIndex, newDocs: DataFrame): DataFrame = {
     val probe = probeVec(index, index.vecCol)
-    // one collect of the (tiny) centroid table, then the same map-only
-    // compiled assignment the build path uses — bit-consistent with
-    // ivfBuild's multi-assign, zero shuffle on the ingest batch
+    // one collect of the (tiny) centroid table, then the compiled
+    // map-only nearest-cells kernel (centroid matrix as a codegen
+    // reference object) — ivfBuild assigns through here too, so build
+    // and ingest share one rule; zero shuffle
     val centRows = index.centroids.select(col("_cell").cast("int"),
       col("_center").cast("array<double>")).collect()
     val cents = centRows.map(_.getSeq[Double](1)).toSeq
@@ -247,8 +347,6 @@ object Ann {
       restrictCells: Array[Int]): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import graft.plans.TopKBuffer
     val spark = index.assigned.sparkSession
     val docIdType = index.assigned.schema(index.idCol).dataType
     val tieOrd = graft.plans.PayloadOrdering.forType(docIdType)
@@ -279,17 +377,28 @@ object Ann {
           }
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedEntries.iterator.map { case (d, id) => InternalRow(qi, id, d) }
-      }
+      Iterator.single(heaps)
     }
+    heapPairs(spark, partials, docIdType, index.multiAssign)
+  }
+
+  /** A blocked kernel's result: its per-partition query heaps as
+    * (_qidx, _did, _dist) rows, a doc held in several probed cells
+    * collapsed to its best distance per query. */
+  private def heapPairs(spark: SparkSession, partials: RDD[Array[TopKBuffer]],
+      docIdType: org.apache.spark.sql.types.DataType, multiAssign: Int): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    val rows = partials.flatMap(_.iterator.zipWithIndex.flatMap { case (h, qi) =>
+      h.sortedEntries.iterator.map { case (d, id) => InternalRow(qi, id, d) }
+    })
     val schema = StructType(Seq(
       StructField("_qidx", IntegerType, nullable = false),
       StructField("_did", docIdType),
       StructField("_dist", DoubleType, nullable = false)))
-    val partialDf = Bridge.fromInternalRdd(spark, partials, schema)
-    if (index.multiAssign <= 1) partialDf
-    else partialDf.groupBy("_qidx", "_did").agg(min(col("_dist")).as("_dist"))
+    val df = org.apache.spark.sql.graft.Bridge.fromInternalRdd(spark, rows, schema)
+    if (multiAssign <= 1) df
+    else df.groupBy("_qidx", "_did").agg(min(col("_dist")).as("_dist"))
   }
 
   /** [[ivfSearch]] through the blocked primitive kernel (the
@@ -309,56 +418,9 @@ object Ann {
   def ivfSearchBlocked(index: IvfIndex, queries: DataFrame, k: Int,
       queryId: String = "id", queryVec: String = "embedding",
       metric: String = "cosine", nProbe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types._
-
-    val spark = queries.sparkSession
-    val idType = queries.schema(queryId).dataType
-
-    // probe exactly like ivfSearch (same expressions → same cell sets),
-    // then collect the small (query, vec, cells) table
-    val q = queries.select(col(queryId).as("query_id"),
-      col(queryVec).cast("array<double>").as("_qvec"),
-      probeVec(index, queryVec).as("_qnorm"))
-    val probed = q.crossJoin(broadcast(index.centroids))
-      .groupBy("query_id")
-      .agg(
-        first(col("_qvec")).as("_qvec"),
-        topk_by_distance(
-          vector_distance(col("_qnorm"), col("_center"), "euclidean"),
-          col("_cell"), nProbe).as("_cells"))
-      .select(col("query_id"), col("_qvec"),
-        col("_cells.value").as("_cells"))
-      .collect()
-
-    val qIds = probed.map(_.get(0))
-    val qVecs = probed.map(_.getSeq[Double](1).toArray)
-    // cell → probing-query indices as a dense array (cells are 0..nCells)
-    val cellToQueries: Array[Array[Int]] = {
-      val m = probed.iterator.zipWithIndex
-        .flatMap { case (r, qi) => r.getSeq[Int](2).map(c => (c, qi)) }
-        .toSeq.groupBy(_._1)
-      Array.tabulate(index.nCells)(c =>
-        m.get(c).map(_.map(_._2).toArray).getOrElse(Array.empty[Int]))
-    }
-
-    val qIdDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(qIds.zipWithIndex.map { case (id, i) =>
-        org.apache.spark.sql.Row(i, id)
-      }.toIndexedSeq),
-      StructType(Seq(StructField("_qidx", IntegerType, nullable = false),
-        StructField("query_id", idType))))
-
-    blockedPairs(index, qVecs, cellToQueries, k, metric,
-        restrictCells = null)
-      .groupBy("_qidx")
-      .agg(topk_by_distance(col("_dist"), col("_did"), k).as("_topk"))
-      .join(broadcast(qIdDf), "_qidx")
-      .select(col("query_id"), posexplode(col("_topk")).as(Seq("_pos", "_hit")))
-      .select(
-        col("query_id"),
-        col("_hit.value").as("id"),
-        col("_hit.distance").as("distance"),
-        (col("_pos") + 1).cast("int").as("rank"))
+    val probe = probeCollect(index, queries, queryId, queryVec, nProbe)
+    assembleTopK(blockedPairs(index, probe.qVecs, probe.cellToQueries, k,
+      metric, restrictCells = null), probe, k, k, metric, 0, null, index)
   }
 
   // ---- scalar-quantized codes (IVF-SQ8) ------------------------------
@@ -805,8 +867,6 @@ object Ann {
       restrictCells: Array[Int]): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import graft.plans.TopKBuffer
     val spark = sq.coded.sparkSession
     val index = sq.ivf
     val mins = sq.codebook.mins.toArray
@@ -849,17 +909,9 @@ object Ann {
           }
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedEntries.iterator.map { case (d, id) => InternalRow(qi, id, d) }
-      }
+      Iterator.single(heaps)
     }
-    val schema = StructType(Seq(
-      StructField("_qidx", IntegerType, nullable = false),
-      StructField("_did", docIdType),
-      StructField("_dist", DoubleType, nullable = false)))
-    val partialDf = Bridge.fromInternalRdd(spark, partials, schema)
-    if (index.multiAssign <= 1) partialDf
-    else partialDf.groupBy("_qidx", "_did").agg(min(col("_dist")).as("_dist"))
+    heapPairs(spark, partials, docIdType, index.multiAssign)
   }
 
   /** [[ivfSearchBlocked]] over SQ8 codes: same probe step, but the scan
@@ -913,7 +965,7 @@ object Ann {
     }
   }
 
-  /** Probe step shared by the coded-scan kernels: collect each query's
+  /** Probe step shared by the blocked kernels: collect each query's
     * `nProbe` nearest cells plus its raw vector to the driver (Q×nProbe
     * ints + Q vectors — broadcast-sized by contract). */
   private final case class ProbeSet(qIds: Array[Any],
@@ -947,7 +999,7 @@ object Ann {
     ProbeSet(qIds, qVecs, cellToQueries, idType)
   }
 
-  /** Shared tail of the coded-scan kernels: per-partition partials →
+  /** Shared tail of the blocked kernels: per-partition partials →
     * global per-query top-`heapK` → optional exact rerank of the
     * candidate set against the base table. */
   private def assembleTopK(partialDf: DataFrame, probe: ProbeSet, k: Int,
@@ -1137,10 +1189,10 @@ object Ann {
     * deterministic hash-picked sample.
     *
     * The corpus-scale phase is ONE pass (hash-filter + top-`maxSample`
-    * by splitmix order — layout-independent); the m independent k-means
+    * by xxhash64 order — layout-independent); the m independent [[lloyd]]
     * fits run driver-side over the collected sample (the k-means-centroid
-    * pattern: the model is tiny, the data pass is distributed), in
-    * parallel across subspaces. Everything is deterministic: the sample
+    * pattern: the model is tiny, the data pass is distributed), each
+    * spread over the driver's cores. Everything is deterministic: the sample
     * and its order are hash-defined, init is evenly-spaced codewords over
     * the lexicographically-sorted distinct sub-vectors (no RNG), Lloyd
     * assignment ties break low-index, accumulation order is fixed —
@@ -1150,17 +1202,8 @@ object Ann {
       nCodes: Int = 256, maxIter: Int = 12, seed: Long = 42L,
       sampleFraction: Double = 1.0, maxSample: Int = 32768): PqCodebook = {
     require(nCodes >= 1 && nCodes <= 256, "nCodes must be in [1, 256]")
-    val filtered =
-      if (sampleFraction >= 1.0) docs
-      else docs.where(pmod(xxhash64(col(idCol), lit(seed)), lit(1000000L))
-        < (sampleFraction * 1000000L).toLong)
-    val rows = filtered
-      .select(col(vecCol).cast("array<double>").as("_v"),
-        xxhash64(col(idCol), lit(seed)).as("_rk"))
-      .where(col("_v").isNotNull)
-      .orderBy("_rk").limit(maxSample)
-      .select("_v").collect()
-    val sample = rows.map(_.getSeq[Double](0).toArray)
+    val sample = hashSample(docs, idCol, vecCol, seed, sampleFraction,
+      maxSample)
     require(sample.nonEmpty, "pqTrain: empty fit sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
@@ -1174,59 +1217,11 @@ object Ann {
       val distinct = pts.map(_.toVector).distinct.sorted(
         Ordering.Implicits.seqOrdering[Vector, Double])
       val kEff = math.min(nCodes, distinct.length)
-      var cent = Array.tabulate(kEff)(c =>
-        distinct((c.toLong * distinct.length / kEff).toInt).toArray)
-      // -1 so the first pass always registers as changed and runs the
-      // mean update — all-zero init would short-circuit Lloyd entirely
-      // when every point's nearest init codeword is index 0 (kEff = 1)
-      val assign = Array.fill(pts.length)(-1)
-      var it = 0
-      var changed = true
-      while (it < maxIter && changed) {
-        changed = false
-        var p = 0
-        while (p < pts.length) {
-          val v = pts(p)
-          var best = 0
-          var bestD = Double.MaxValue
-          var c = 0
-          while (c < kEff) {
-            val cw = cent(c)
-            var d = 0.0
-            var i = 0
-            while (i < subDim) { val t = v(i) - cw(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          if (assign(p) != best) { assign(p) = best; changed = true }
-          p += 1
-        }
-        if (changed) {
-          val sums = Array.ofDim[Double](kEff, subDim)
-          val cnt = new Array[Int](kEff)
-          var p2 = 0
-          while (p2 < pts.length) {
-            val a = assign(p2); val v = pts(p2)
-            var i = 0
-            while (i < subDim) { sums(a)(i) += v(i); i += 1 }
-            cnt(a) += 1
-            p2 += 1
-          }
-          cent = Array.tabulate(kEff)(c =>
-            if (cnt(c) == 0) cent(c) // empty cell keeps its codeword
-            else { val s = sums(c); Array.tabulate(subDim)(i => s(i) / cnt(c)) })
-        }
-        it += 1
-      }
-      cent
+      lloyd(pts, Array.tabulate(kEff)(c =>
+        distinct((c.toLong * distinct.length / kEff).toInt).toArray), maxIter)
     }
 
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fits = Await.result(
-      Future.sequence((0 until m).map(j => Future(fitSubspace(j)))), Duration.Inf)
-    PqCodebook(subDim, fits.map(_.map(_.toSeq).toSeq).toSeq)
+    PqCodebook(subDim, (0 until m).map(fitSubspace(_).map(_.toSeq).toSeq))
   }
 
   /** IVF index + PQ codes: `coded` is (idCol, _code, _cell); originals
@@ -1312,8 +1307,6 @@ object Ann {
       .contains(metric), s"unsupported metric $metric")
     import org.apache.spark.sql.graft.Bridge
     import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import graft.plans.TopKBuffer
 
     val spark = pq.coded.sparkSession
     val index = pq.ivf
@@ -1448,6 +1441,16 @@ object Ann {
         }
         st
       }
+      // ||q - a - r||^2 as the decomposed sum ||q-a||^2 - 2(q·r - a·r) +
+      // ||r||^2. Its rounding error is a few ulps of the largest term, so
+      // on an exact hit it lands near ±1e-16, not 0: a result inside that
+      // band is reported as 0 (else euclidean's sqrt turns the noise into
+      // a 1e-8 distance, or NaN)
+      def residL2(qa2: Double, ip: Double, cross: Double, rn: Double): Double = {
+        val s = qa2 - 2.0 * (ip - cross) + rn
+        val band = 1e-14 * (qa2 + 2.0 * (math.abs(ip) + math.abs(cross)) + rn)
+        if (s <= band) 0.0 else s
+      }
       val heaps = Array.fill(vecs.length)(new TopKBuffer(heapK, tieOrd))
       rows.foreach { row =>
         if (!row.isNullAt(1) && !row.isNullAt(2)) {
@@ -1484,12 +1487,9 @@ object Ann {
                     val dot = st.qa(q) + ip
                     val vn2 = st.anorm2 + 2.0 * crossSum + rn
                     1.0 - dot / (math.sqrt(vn2) * qNorms(q))
-                  case "sqeuclidean" =>
-                    st.qa2(q) - 2.0 * (ip - crossSum) + rn
+                  case "sqeuclidean" => residL2(st.qa2(q), ip, crossSum, rn)
                   case "euclidean" =>
-                    // the decomposed sum can land ~-1e-16 on a near-exact
-                    // hit; an unguarded sqrt would NaN it out of the heap
-                    math.sqrt(math.max(0.0, st.qa2(q) - 2.0 * (ip - crossSum) + rn))
+                    math.sqrt(residL2(st.qa2(q), ip, crossSum, rn))
                   case _ => -(st.qa(q) + ip)
                 }
                 if (!d.isNaN) heaps(q).insert(d, idVal)
@@ -1522,17 +1522,9 @@ object Ann {
           }
         }
       }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedEntries.iterator.map { case (d, id) => InternalRow(qi, id, d) }
-      }
+      Iterator.single(heaps)
     }
-    val schema = StructType(Seq(
-      StructField("_qidx", IntegerType, nullable = false),
-      StructField("_did", docIdType),
-      StructField("_dist", DoubleType, nullable = false)))
-    val partialDf = Bridge.fromInternalRdd(spark, partials, schema)
-    if (index.multiAssign <= 1) partialDf
-    else partialDf.groupBy("_qidx", "_did").agg(min(col("_dist")).as("_dist"))
+    heapPairs(spark, partials, docIdType, index.multiAssign)
   }
 
   private[graft] def prunedPqCoded(pq: PqIvfIndex,
@@ -1724,9 +1716,9 @@ object Ann {
 
   /** Fully distributed Lloyd k-means over an embedding column — the
     * cluster-side complement of [[ivfBuild]]'s sampled driver fit. Where
-    * `ivfBuild` fits spark.ml k-means on a (layout-pinned) sample and is
-    * the right default for a coarse quantizer, this runs every Lloyd
-    * step on the cluster: each iteration is ONE broadcast join (assign:
+    * `ivfBuild` fits on a capped hash-picked sample collected to the
+    * driver and is the right default for a coarse quantizer, this runs
+    * every Lloyd step on the cluster: each iteration is ONE broadcast join (assign:
     * N×k distance argmin, no shuffle of the docs beyond the groupBy
     * collapse) plus ONE partially-aggregated groupBy (centroid update),
     * so the full corpus participates in the fit — the shape you want

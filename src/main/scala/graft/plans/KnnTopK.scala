@@ -132,20 +132,22 @@ case class KnnTopKExec(
 
     val qRows = right.executeCollect()
     val qIds: Array[Any] = qRows.map(r => InternalRow.copyValue(r.get(0, qIdType)))
+    // array<float> with either element nullability reads as floats: a
+    // Dataset of Array[Float] carries containsNull = false
+    def isFloatVec(t: DataType): Boolean = t match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val qVecFloat = isFloatVec(right.output(1).dataType)
     val qVecs: Array[Array[Double]] = qRows.map { r =>
       val arr = r.getArray(1)
-      right.output(1).dataType match {
-        case ArrayType(FloatType, _) =>
-          arr.toFloatArray().map(_.toDouble)
-        case _ => arr.toDoubleArray()
-      }
+      if (qVecFloat) arr.toFloatArray().map(_.toDouble) else arr.toDoubleArray()
     }
     val bc = sparkContext.broadcast((qIds, qVecs))
     val m = metric
     val ex = excludeSelf
     val kk = k
-    val docVecFloat = left.output(1).dataType == ArrayType(FloatType) ||
-      left.output(1).dataType == ArrayType(FloatType, containsNull = true)
+    val docVecFloat = isFloatVec(left.output(1).dataType)
 
     val tieOrd = PayloadOrdering.forType(docIdType)
     val partials: RDD[(Int, TopKBuffer)] = left.execute().mapPartitions { rows =>
