@@ -17,6 +17,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * For sessions we don't construct, [[graft.functions.registerAll]] does the
   * same registration at runtime. Both share one builder table.
+  *
+  * It also injects [[graft.plans.TagPromotionRule]]. It registers no
+  * planner strategy: the operators that build graft's logical nodes call
+  * [[graft.plans.install]], so those nodes plan on every session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -24,9 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction(
         (FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
-    e.injectPlannerStrategy(_ => graft.plans.KnnStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.KnnTopKStrategy)
-    e.injectOptimizerRule(_ => graft.plans.KnnRewriteRule)
     e.injectOptimizerRule(_ => graft.plans.TagPromotionRule)
   }
 }

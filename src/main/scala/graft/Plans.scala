@@ -14,8 +14,8 @@ import graft.operators.{Filters, Knn}
   *
   * Usage: runMain graft.Plans <outDir> <suffix> <name> [<name> ...]
   *   name ∈ SparkEntry.queries keys, or one of the bench-row specials
-  *   (create_1m, filter_1m, knn_exact_1m, knn_batch100, knn_blocked_1m,
-  *   knn_blocked_100). `all-headline` expands to the bench headline set.
+  *   (create_1m, filter_1m, knn_exact_1m, knn_batch100). `all-headline`
+  *   expands to the bench headline set.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -29,7 +29,7 @@ object Plans {
       "q56_pack_blocks", "q59_sq_quantize", "q60_unigram_nll",
       "q61_source_mixing", "q62_bigram_nll")
     val baselineRows = Seq("create_1m", "filter_1m", "knn_exact_1m",
-      "knn_batch100", "knn_blocked_1m", "knn_blocked_100")
+      "knn_batch100")
     val names = args.drop(2).flatMap {
       case "all-headline" => headline ++ baselineRows
       case n => Seq(n)
@@ -67,10 +67,6 @@ object Plans {
           Knn.bruteForce(stored, queries1, 10, "cosine")
         case "knn_batch100" =>
           Knn.bruteForce(stored, queries100, 10, "cosine")
-        case "knn_blocked_1m" =>
-          Knn.bruteForceBlocked(stored, queries1, 10, "cosine")
-        case "knn_blocked_100" =>
-          Knn.bruteForceBlocked(stored, queries100, 10, "cosine")
         case n => SparkEntry.queries(n)(spark, sfDir)
       }
       val plan = df.queryExecution.explainString(FormattedMode)

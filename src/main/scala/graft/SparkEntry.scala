@@ -463,11 +463,11 @@ object SparkEntry {
       .orderBy("event_id")
   }
 
-  // knn through the custom Catalyst operator (KnnJoin plan node) — same
-  // oracle shape as the declarative path, exercising the planner strategy
+  // knn through the KnnTopK Catalyst operator (planned as KnnTopKExec),
+  // ten queries that are themselves in the corpus, self excluded
   private def q33(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
-    Knn.knnJoin(emb, emb.where(col("vec_id") >= 100 && col("vec_id") < 110),
+    Knn.bruteForce(emb, emb.where(col("vec_id") >= 100 && col("vec_id") < 110),
       k = 3, metric = "cosine",
       docId = "vec_id", queryId = "vec_id", excludeSelf = true)
       .withColumn("distance", round(col("distance"), 6))

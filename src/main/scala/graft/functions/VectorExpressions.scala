@@ -54,7 +54,7 @@ case class VectorDistance(left: Expression, right: Expression, metric: String)
   // r10: 4-chain stride-4 accumulation with sequential tail, combined
   // (s0+s1)+(s2+s3) — one `acc +=` chain serializes on FP-add latency
   // (~4 cycles/element); four independent chains pipeline it. The SAME
-  // grouping is generated in doGenCode and used by KnnJoinExec.dot4 /
+  // grouping is generated in doGenCode and used by KnnTopKExec.dot4 /
   // sqeuclidean4 and VectorKernels.nearestCells, so expression and
   // blocked-kernel paths stay bit-consistent with each other. n < 4
   // takes only the tail — bit-identical to the old sequential sum.
@@ -798,7 +798,7 @@ object VectorKernels {
     while (c < cents.length) {
       val ctr = cents(c)
       // r10: 4-chain stride-4 unroll, (s0+s1)+(s2+s3) — the same
-      // grouping as KnnJoinExec.sqeuclidean4 / VectorDistance, so
+      // grouping as KnnTopKExec.sqeuclidean4 / VectorDistance, so
       // assignment order stays consistent with euclidean probe
       // ordering. The old per-element `acc < bound` abort serialized
       // the loop on a compare per FP-add (the add-latency chain was

@@ -362,7 +362,7 @@ object Ann {
     val m = metric
     val partials = Bridge.toInternalRdd(child).mapPartitions { rows =>
       val (vecs, c2q) = bc.value
-      val qNorms = vecs.map(graft.plans.KnnJoinExec.norm)
+      val qNorms = vecs.map(graft.plans.KnnTopKExec.norm)
       val heaps = Array.fill(vecs.length)(new TopKBuffer(heapK, tieOrd))
       rows.foreach { row =>
         if (!row.isNullAt(1) && !row.isNullAt(2)) {
@@ -372,7 +372,7 @@ object Ann {
           if (qs.length > 0) {
             val idVal = InternalRow.copyValue(row.get(0, docIdType))
             val v = row.getArray(1).toDoubleArray()
-            graft.plans.KnnJoinExec.scoreRowSubset(m, v, idVal, vecs,
+            graft.plans.KnnTopKExec.scoreRowSubset(m, v, idVal, vecs,
               qNorms, heaps, qs)
           }
         }
@@ -401,20 +401,19 @@ object Ann {
     else df.groupBy("_qidx", "_did").agg(min(col("_dist")).as("_dist"))
   }
 
-  /** [[ivfSearch]] through the blocked primitive kernel (the
-    * [[Knn.bruteForceBlocked]] strategy, cell-pruned): the probed
+  /** [[ivfSearch]] through the blocked primitive kernel (the exact
+    * `KnnTopKExec` strategy, cell-pruned): the probed
     * (query, cell) set is collected once (Q × nProbe ints — small by the
     * same contract ivfSearchPruned relies on), inverted into a
     * cell → query-indices map, and each doc partition streams its rows
     * through one primitive-math pass updating bounded heaps for exactly
     * the queries that probed the row's cell. Decodes each doc vector
-    * once per row instead of once per (row, probing-query) join copy —
-    * same ~5× win the blocked exact kernel gets for Q ≳ 50. Results
-    * equal [[ivfSearch]] (spec-asserted), multiAssign included since r9:
-    * partition heaps widen to k·A entries (the top-k distinct docs
-    * always survive — one doc occupies at most A slots) and the global
-    * stage collapses per-(query, doc) duplicates before the final
-    * top-k. */
+    * once per row instead of once per (row, probing-query) join copy.
+    * Results equal [[ivfSearch]] (spec-asserted), multiAssign included
+    * since r9: partition heaps widen to k·A entries (the top-k distinct
+    * docs always survive — one doc occupies at most A slots) and the
+    * global stage collapses per-(query, doc) duplicates before the
+    * final top-k. */
   def ivfSearchBlocked(index: IvfIndex, queries: DataFrame, k: Int,
       queryId: String = "id", queryVec: String = "embedding",
       metric: String = "cosine", nProbe: Int = 4): DataFrame = {
@@ -884,7 +883,7 @@ object Ann {
     val tieOrd = graft.plans.PayloadOrdering.forType(docIdType)
     val partials = Bridge.toInternalRdd(child).mapPartitions { rows =>
       val (vecs, c2q, mn, dl) = bc.value
-      val qNorms = vecs.map(graft.plans.KnnJoinExec.norm)
+      val qNorms = vecs.map(graft.plans.KnnTopKExec.norm)
       val heaps = Array.fill(vecs.length)(new TopKBuffer(heapK, tieOrd))
       val dim = mn.length
       val recon = new Array[Double](dim)
@@ -904,7 +903,7 @@ object Ann {
               recon(i) = mn(i) + (code(i) & 0xFF) * dl(i)
               i += 1
             }
-            graft.plans.KnnJoinExec.scoreRowSubset(m, recon, idVal, vecs,
+            graft.plans.KnnTopKExec.scoreRowSubset(m, recon, idVal, vecs,
               qNorms, heaps, qs)
           }
         }
@@ -1357,7 +1356,7 @@ object Ann {
           }
           t
         }
-      val qNorms = vecs.map(graft.plans.KnnJoinExec.norm)
+      val qNorms = vecs.map(graft.plans.KnnTopKExec.norm)
       // lazily-built per-query LUTs: lut(q)(j*256 + c)
       val luts = new Array[Array[Double]](vecs.length)
       def lutOf(q: Int): Array[Double] = {
@@ -2001,10 +2000,10 @@ object Ann {
     val pq = jlProject(queries, queryId, queryVec, outDim, seed,
         quantScale)
       .select(col(queryId), col("jl").cast("array<double>").as("_jq"))
-    // blocked sketch-knn kernel (bounded heaps, no expression-path
-    // crossJoin) — the r6 fix: bruteForce here cost ~30 s/run where the
-    // blocked kernel scans the same sketches in well under a second
-    val cand = Knn.bruteForceBlocked(pd, pq, rerank, "sqeuclidean",
+    // the exact knn kernel over the sketches (bounded heaps, no
+    // expression-path crossJoin) — the r6 fix: the expression arm here
+    // cost ~30 s/run where the kernel scans them in well under a second
+    val cand = Knn.bruteForce(pd, pq, rerank, "sqeuclidean",
         docId = docId, docVec = "_jd", queryId = queryId,
         queryVec = "_jq")
       .select(col("query_id"), col("id"))

@@ -182,8 +182,8 @@ object Evaluate {
     * reliability curve is non-monotone (Platt's sigmoid assumes a
     * shape; isotonic doesn't).
     *
-    * Twin of [[isotonicCalibrate]] (the bruteForce/bruteForceBlocked
-    * relationship): that one bins with [[calibrationBins]] and runs
+    * Twin of [[isotonicCalibrate]] (one result, two altitudes): that
+    * one bins with [[calibrationBins]] and runs
     * PAV's pooling loop DRIVER-side over ≤ nBins collected rows (the
     * guarded-driver-fit altitude); this one never collects — the whole
     * fit is plan-side, for callers that forbid driver state or want the

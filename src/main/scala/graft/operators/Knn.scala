@@ -2,23 +2,30 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 import graft.functions._
 
 /** Brute-force exact k-nearest-neighbor search — the reference's
   * `da.find(query_embeddings)` / `da.match(other)` re-expressed as one
-  * declarative Spark plan (reference: docarray/array/mixins/find.py:88-249
-  * dispatch, docarray/array/storage/memory/find.py:17-115 kernel,
+  * Spark plan (reference: docarray/array/mixins/find.py:88-249
+  * dispatch, docarray/array/storage/memory/find.py:17-181 kernel,
   * docarray/array/mixins/match.py:12-92 writeback).
   *
-  * Physical shape (the 100 TB-scale path):
-  *   docs  ──[broadcast nested-loop join with the (small) query side]──▶
-  *   codegen'd `VectorDistance` per pair ──▶ `TopKByDistance` bounded-heap
-  *   aggregate (map-side partial per partition, heap-merge on shuffle).
+  * Physical shape (the 100 TB-scale path): one [[graft.plans.KnnTopK]]
+  * operator, planned as `KnnTopKExec` on every session — the (small)
+  * query side is collected and broadcast as primitive double[][], each
+  * doc partition streams its rows through one bounded heap per query,
+  * and the per-partition heaps merge on a shuffle of
+  * O(partitions × Q × k) rows. No Window sort over N×Q rows, no cross
+  * product materialized.
   *
-  * The cross product is *pipelined*, never materialized: each doc partition
-  * streams against the broadcast query table and only O(partitions × Q × k)
-  * rows reach the shuffle. No Window sort over N×Q rows, no collect.
+  * The expression arm — a broadcast nested-loop join, a distance
+  * expression per pair and the `topk_by_distance` aggregate — serves
+  * only what the kernel cannot: a user-supplied distance
+  * ([[bruteForceCustom]]) and `normalization`, which needs the full
+  * per-query distance row.
   */
 object Knn {
 
@@ -27,9 +34,11 @@ object Knn {
     * @return columns: `query_id` (original query id type), `id` (doc id
     *         type), `distance` (double), `rank` (1-based, ascending
     *         distance).
+    * @param metric one of [[VectorDistance.metrics]]; vectors are
+    *        array<float|double>.
     * @param excludeSelf drop hits whose id equals the query id
     *        (reference: find.py:174,237-243 — done there via limit+1 and
-    *        trim; here a join anti-condition *before* the top-k, cleaner).
+    *        trim; here an exclusion *before* the top-k, cleaner).
     * @param normalization optional (a,b) min-max rescale of distances,
     *        computed over the FULL per-query distance row, not just the
     *        top-k — matching reference memory/find.py:109-114.
@@ -45,14 +54,88 @@ object Knn {
       queryVec: String = "embedding",
       excludeSelf: Boolean = false,
       normalization: Option[(Double, Double)] = None): DataFrame = {
+    require(VectorDistance.metrics.contains(metric),
+      s"unknown metric '$metric' (one of ${VectorDistance.metrics.mkString(", ")})")
+    if (normalization.isDefined)
+      expressionArm(docs, queries, k, vector_distance(_, _, metric),
+        docId, docVec, queryId, queryVec, excludeSelf, normalization)
+    else kernelArm(docs, queries, k, metric, docId, docVec, queryId,
+      queryVec, excludeSelf)
+  }
 
+  /** [[bruteForce]] through the [[graft.plans.KnnTopK]] operator. */
+  private def kernelArm(docs: DataFrame, queries: DataFrame, k: Int,
+      metric: String, docId: String, docVec: String, queryId: String,
+      queryVec: String, excludeSelf: Boolean): DataFrame = {
+    require(k > 0, s"topk k must be > 0, got $k")
+    var d = docs.select(col(docId).as("_did"), col(docVec).as("_dvec"))
+    // a null query vector scores nothing, as in the expression arm
+    var q = queries.select(col(queryId).as("query_id"), col(queryVec).as("_qvec"))
+      .where(col("_qvec").isNotNull)
+    // the expression arm's `_did != query_id` is null, so false, on a
+    // null id: such rows never pair
+    if (excludeSelf) {
+      d = d.where(col("_did").isNotNull)
+      q = q.where(col("query_id").isNotNull)
+    }
+    def isVec(t: DataType): Boolean = t match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }
+    val (dt, qt) = (d.schema("_dvec").dataType, q.schema("_qvec").dataType)
+    require(isVec(dt) && isVec(qt),
+      s"expects array<float|double> vectors, got ${dt.sql}, ${qt.sql}")
+
+    val spark = docs.sparkSession
+    graft.plans.install(spark)
+    Bridge.ofRows(spark, graft.plans.KnnTopK.create(
+        Bridge.logicalPlan(d), Bridge.logicalPlan(q), k, metric, excludeSelf))
+      .select(col("query_id"), posexplode(col("_topk")).as(Seq("_pos", "_hit")))
+      .select(
+        col("query_id"),
+        col("_hit.value").as("id"),
+        col("_hit.distance").as("distance"),
+        (col("_pos") + 1).cast("int").as("rank"))
+  }
+
+  /** knn with a user-supplied distance: any `(docVec, queryVec) => Column`
+    * (native expression composition or a UDF) runs through the broadcast
+    * + bounded-heap expression plan — the reference's custom-metric
+    * callable (reference: docarray/array/storage/memory/find.py:69-81). */
+  def bruteForceCustom(
+      docs: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      distance: (Column, Column) => Column,
+      docId: String = "id",
+      docVec: String = "embedding",
+      queryId: String = "id",
+      queryVec: String = "embedding",
+      excludeSelf: Boolean = false): DataFrame =
+    expressionArm(docs, queries, k, distance, docId, docVec, queryId,
+      queryVec, excludeSelf, normalization = None)
+
+  /** The expression arm: docs × broadcast queries, `distance` per pair,
+    * then the `topk_by_distance` aggregate per query (map-side partial
+    * per partition, heap-merge on shuffle). */
+  private def expressionArm(
+      docs: DataFrame,
+      queries: DataFrame,
+      k: Int,
+      distance: (Column, Column) => Column,
+      docId: String,
+      docVec: String,
+      queryId: String,
+      queryVec: String,
+      excludeSelf: Boolean,
+      normalization: Option[(Double, Double)]): DataFrame = {
     val d = docs.select(col(docId).as("_did"), col(docVec).as("_dvec"))
     val q = queries.select(col(queryId).as("query_id"), col(queryVec).as("_qvec"))
 
     var pairs = d.crossJoin(broadcast(q))
     if (excludeSelf) pairs = pairs.where(col("_did") =!= col("query_id"))
 
-    val dist = vector_distance(col("_dvec"), col("_qvec"), metric)
+    val dist = distance(col("_dvec"), col("_qvec"))
 
     val aggCols = Seq(topk_by_distance(dist, col("_did"), k).as("_topk")) ++
       (if (normalization.isDefined)
@@ -81,162 +164,8 @@ object Knn {
       (col("_pos") + 1).cast("int").as("rank"))
   }
 
-  /** knn with a user-supplied distance: any `(docVec, queryVec) => Column`
-    * (native expression composition or a UDF) runs through the same
-    * broadcast + bounded-heap plan — the reference's custom-metric callable
-    * (reference: docarray/array/storage/memory/find.py:69-81). */
-  def bruteForceCustom(
-      docs: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      distance: (Column, Column) => Column,
-      docId: String = "id",
-      docVec: String = "embedding",
-      queryId: String = "id",
-      queryVec: String = "embedding",
-      excludeSelf: Boolean = false): DataFrame = {
-    val d = docs.select(col(docId).as("_did"), col(docVec).as("_dvec"))
-    val q = queries.select(col(queryId).as("query_id"), col(queryVec).as("_qvec"))
-    var pairs = d.crossJoin(broadcast(q))
-    if (excludeSelf) pairs = pairs.where(col("_did") =!= col("query_id"))
-    pairs
-      .groupBy("query_id")
-      .agg(topk_by_distance(distance(col("_dvec"), col("_qvec")), col("_did"), k)
-        .as("_topk"))
-      .select(col("query_id"), posexplode(col("_topk")).as(Seq("_pos", "_hit")))
-      .select(
-        col("query_id"),
-        col("_hit.value").as("id"),
-        col("_hit.distance").as("distance"),
-        (col("_pos") + 1).cast("int").as("rank"))
-  }
-
-  /** Blocked brute-force kernel — same results as [[bruteForce]], different
-    * physical strategy: the (small) query matrix is collected once and
-    * broadcast as primitive double[][]; each doc partition streams its rows
-    * through a tight primitive loop maintaining one bounded heap per query
-    * (reference's threaded block kernel, storage/memory/find.py:117-181,
-    * re-expressed as partition parallelism). Emits only per-partition top-k
-    * rows; the final merge reuses the TopKByDistance aggregate.
-    *
-    * ~5× faster than the expression path for Q ≳ 50 because the doc vector
-    * is decoded once per row instead of once per (row, query) pair, and the
-    * inner loop is branch-light primitive math. Use when Q × dim fits
-    * comfortably in executor memory (the usual find() regime); for huge Q
-    * fall back to [[bruteForce]] or [[Ann]].
-    */
-  def bruteForceBlocked(
-      docs: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      metric: String = "cosine",
-      docId: String = "id",
-      docVec: String = "embedding",
-      queryId: String = "id",
-      queryVec: String = "embedding",
-      excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.types._
-    import graft.plans.TopKBuffer
-
-    val spark = docs.sparkSession
-    val idType = docs.schema(docId).dataType
-
-    // small side: collect (id, vec) once; broadcast primitives
-    val qRows = queries.select(col(queryId).cast(idType), col(queryVec).cast("array<double>"))
-      .collect()
-    val qVecs = qRows.map(_.getSeq[Double](1).toArray)
-    val qIds = qRows.map(_.get(0))
-    // internal (catalyst) form of the query ids for self-exclusion compares
-    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(idType)
-    val qIdsInternal: Array[Any] = qIds.map(toCatalyst)
-    val bc = spark.sparkContext.broadcast((qIdsInternal, qVecs))
-
-    val child = docs.select(col(docId), col(docVec).cast("array<double>"))
-    val m = metric
-    val ex = excludeSelf
-    val tieOrd = graft.plans.PayloadOrdering.forType(idType)
-    val partials = Bridge.toInternalRdd(child).mapPartitions { rows =>
-      val (ids, vecs) = bc.value
-      val qNorms = vecs.map(graft.plans.KnnJoinExec.norm)
-      val heaps = Array.fill(vecs.length)(new TopKBuffer(k, tieOrd))
-      rows.foreach { row =>
-        if (!row.isNullAt(1)) {
-          val idVal = InternalRow.copyValue(row.get(0, idType))
-          val v = row.getArray(1).toDoubleArray()
-          graft.plans.KnnJoinExec.scoreRow(m, v, idVal, vecs, qNorms, ids, heaps, ex)
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-        h.sortedEntries.iterator.map { case (d, id) =>
-          InternalRow(q, id, d)
-        }
-      }
-    }
-    val schema = StructType(Seq(
-      StructField("_qidx", IntegerType, nullable = false),
-      StructField("_did", idType),
-      StructField("_dist", DoubleType, nullable = false)))
-    val partialDf = Bridge.fromInternalRdd(spark, partials, schema)
-
-    // final merge: per-query bounded heap again, then explode with ranks
-    import graft.functions.{topk_by_distance => topk}
-    val qIdDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(qIds.zipWithIndex.map { case (id, i) =>
-        org.apache.spark.sql.Row(i, id)
-      }.toIndexedSeq),
-      StructType(Seq(StructField("_qidx", IntegerType, nullable = false),
-        StructField("query_id", idType))))
-
-    val merged = partialDf
-      .groupBy("_qidx")
-      .agg(topk(col("_dist"), col("_did"), k).as("_topk"))
-      .join(broadcast(qIdDf), "_qidx")
-      .select(col("query_id"), posexplode(col("_topk")).as(Seq("_pos", "_hit")))
-
-    merged.select(
-      col("query_id"),
-      col("_hit.value").as("id"),
-      col("_hit.distance").as("distance"),
-      (col("_pos") + 1).cast("int").as("rank"))
-  }
-
-  @inline private def distOf(metric: String, a: Array[Double], b: Array[Double]): Double =
-    graft.plans.KnnJoinExec.distOf(metric, a, b)
-
-  /** knn through the custom Catalyst operator: builds a logical
-    * [[graft.plans.KnnJoin]] node (registered via `extraStrategies` /
-    * GraftExtensions) so EXPLAIN shows `KnnJoinExec` and the planner owns
-    * the whole operator. Same results and kernel as [[bruteForceBlocked]].
-    */
-  def knnJoin(
-      docs: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      metric: String = "cosine",
-      docId: String = "id",
-      docVec: String = "embedding",
-      queryId: String = "id",
-      queryVec: String = "embedding",
-      excludeSelf: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.graft.Bridge
-    val spark = docs.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.KnnStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.KnnStrategy
-    // fresh aliases → disjoint attribute ids even for self-knn
-    val d = docs.select(col(docId).as("_knn_did"),
-      col(docVec).cast("array<double>").as("_knn_dvec"))
-    val q = queries.select(col(queryId).as("_knn_qid"),
-      col(queryVec).cast("array<double>").as("_knn_qvec"))
-    Bridge.ofRows(spark, graft.plans.KnnJoin.create(
-      Bridge.logicalPlan(d), Bridge.logicalPlan(q), k, metric, excludeSelf))
-  }
-
   /** Large-Q regime: both sides too big for one broadcast. Queries are
-    * hash-split into `nBlocks` groups; each block runs the blocked kernel
+    * hash-split into `nBlocks` groups; each block runs [[bruteForce]]
     * (its own broadcast), results union lazily — the full A.match(B) grid
     * with per-block memory bounded at |Q|/nBlocks × dim doubles. Pick
     * nBlocks so a block's query matrix is ~10-50 MB.
@@ -272,7 +201,7 @@ object Knn {
     }
     (0 until nBlocks).map { b =>
       val block = queries.where(pmod(xxhash64(col(queryId)), lit(nBlocks)) === b)
-      bruteForceBlocked(side, block, k, metric,
+      bruteForce(side, block, k, metric,
         docId, docVec, queryId, queryVec, excludeSelf)
     }.reduce(_.union(_))
   }

@@ -31,9 +31,9 @@ import org.apache.spark.sql.types.StructType
   * The thunk's result schema is asserted against the declared one, so a
   * drifting body fails loudly instead of mis-typing rows positionally.
   *
-  * The strategy is registered idempotently on the session's
-  * experimental methods at wrap time, so the node plans on ANY session
-  * (Verify/Bench build theirs without GraftExtensions' injection).
+  * The strategy is registered with [[install]] at wrap time, so the
+  * node plans on ANY session (Verify/Bench build theirs without
+  * GraftExtensions).
   */
 case class LazyResultPlan(output: Seq[Attribute], body: () => DataFrame)
     extends LeafNode {
@@ -72,10 +72,7 @@ object LazyResult {
     * schema. `body` runs on first action (and per re-execution). */
   def apply(s: SparkSession, schema: StructType)(body: => DataFrame)
       : DataFrame = {
-    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraStrategies.contains(LazyResultStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ LazyResultStrategy
+    install(s)
     val attrs: Seq[Attribute] = schema.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
     Bridge.ofRows(s, LazyResultPlan(attrs, () => body))

@@ -128,7 +128,7 @@ case class TopKByDistance(
 /** Serializable total order over Catalyst payload values, used to break
   * distance ties deterministically. Holds only the (serializable) DataType;
   * the interpreted ordering is rebuilt lazily on each JVM so the buffer can
-  * ride Java-serialized RDD shuffles (KnnJoinExec's reduceByKey). */
+  * ride Java-serialized RDD shuffles (KnnTopKExec's reduceByKey). */
 final class PayloadOrdering(val dt: DataType) extends Ordering[Any] with Serializable {
   @transient private lazy val ord =
     org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
@@ -152,7 +152,7 @@ object PayloadOrdering {
   * skip payload evaluation for rows that can't make the cut. Ties on distance
   * are broken by `ord` (ascending payload wins), making results independent
   * of partition arrival order. Serializable so it can ride RDD-level combine
-  * (KnnJoinExec) as well as this aggregate. */
+  * (KnnTopKExec) as well as this aggregate. */
 final class TopKBuffer(val k: Int, val ord: PayloadOrdering = null) extends Serializable {
   var dists: Array[Double] = new Array[Double](math.min(k, 16))
   var values: Array[Any] = new Array[Any](math.min(k, 16))

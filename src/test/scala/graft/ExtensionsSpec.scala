@@ -116,7 +116,7 @@ class ExtensionsSpec extends SparkSuite {
     }
   }
 
-  test("KnnRewriteRule fires under extensions and preserves results") {
+  test("bruteForce plans KnnTopKExec under extensions, equal to the expression arm") {
     val base = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -125,35 +125,10 @@ class ExtensionsSpec extends SparkSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
-      import org.apache.spark.sql.functions._
-      val docs = s2.range(400).select(
-        col("id"), transform(sequence(lit(0), lit(7)),
-          i => sin((col("id") + 1) * (i + 1)).cast("float")).as("embedding"))
-      val q = docs.where(col("id") < 5)
-      for (ex <- Seq(true, false)) {
-        val viaExt = graft.operators.Knn.bruteForce(docs, q, 6, "cosine",
-          excludeSelf = ex)
-        // the rule must replace the Aggregate with KnnTopK
-        assert(viaExt.queryExecution.optimizedPlan.collectFirst {
-          case p: graft.plans.KnnTopK => p
-        }.isDefined, s"rewrite did not fire (excludeSelf=$ex)")
-        val got = viaExt.select("query_id", "id", "rank")
-          .orderBy("query_id", "rank").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-        // reference run on the base session (no extensions, plain plan)
-        SparkSession.setDefaultSession(base); SparkSession.setActiveSession(base)
-        val bdocs = base.range(400).select(
-          col("id"), transform(sequence(lit(0), lit(7)),
-            i => sin((col("id") + 1) * (i + 1)).cast("float")).as("embedding"))
-        val bq = bdocs.where(col("id") < 5)
-        val want = graft.operators.Knn.bruteForce(bdocs, bq, 6, "cosine",
-          excludeSelf = ex).select("query_id", "id", "rank")
-          .orderBy("query_id", "rank").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-        assert(got == want, s"excludeSelf=$ex")
-        SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-        SparkSession.setDefaultSession(s2); SparkSession.setActiveSession(s2)
-      }
+      // the grid the plain-session KnnSpec runs: metrics × excludeSelf ×
+      // doc partition counts, kernel against expression arm
+      val misses = KnnSpec.gridMismatches(s2)
+      assert(misses.isEmpty, misses.mkString("\n"))
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

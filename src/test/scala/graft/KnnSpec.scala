@@ -127,30 +127,78 @@ class KnnSpec extends SparkSuite {
 
   test("knn plan keeps map-side partial top-k (no full-sort shuffle)") {
     val q = docs.where($"id" === 0)
-    val plan = Knn.bruteForce(docs, q, 3, "cosine")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_topk_by_distance"), plan.take(800))
-    assert(!plan.contains("Window")) // never a rank-over-crossproduct
+    val df = Knn.bruteForce(docs, q, 3, "cosine")
+    // per-partition heaps inside KnnTopKExec, merged on a Q × k shuffle
+    assert(KnnSpec.plansKernel(df), df.queryExecution.executedPlan.toString)
+    assert(!df.queryExecution.executedPlan.toString.contains("Window"))
   }
 
   test("blocked kernel returns identical results to expression path") {
-    val many = spark.range(500).select(
-      col("id"), transform(sequence(lit(0), lit(7)),
-        i => sin((col("id") + 1) * (i + 1)).cast("float")).as("embedding"))
-    val q = many.where(col("id") < 5)
-    for (m <- Seq("cosine", "euclidean", "sqeuclidean", "inner_product");
-         ex <- Seq(true, false)) {
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.select("query_id", "id", "rank").orderBy("query_id", "rank")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-      assert(key(Knn.bruteForceBlocked(many, q, 7, m, excludeSelf = ex)) ==
-        key(Knn.bruteForce(many, q, 7, m, excludeSelf = ex)), s"$m/$ex")
-    }
+    assert(KnnSpec.gridMismatches(spark).isEmpty,
+      KnnSpec.gridMismatches(spark).mkString("\n"))
     // string ids too (internal UTF8String vs external String handling)
+    val many = KnnSpec.gridDocs(spark)
     val sdocs = many.withColumn("id", concat(lit("d"), col("id")))
     val sq = sdocs.limit(3)
-    assert(Knn.bruteForceBlocked(sdocs, sq, 4, "cosine", excludeSelf = true)
-      .count() == 12)
+    assert(KnnSpec.rows(Knn.bruteForce(sdocs, sq, 4, "cosine", excludeSelf = true)) ==
+      KnnSpec.rows(KnnSpec.expressionArm(sdocs, sq, 4, "cosine", excludeSelf = true)))
+    assert(Knn.bruteForce(sdocs, sq, 4, "cosine", excludeSelf = true).count() == 12)
+  }
+
+  test("excludeSelf matches ids across id types: int queries, long docs") {
+    val many = KnnSpec.gridDocs(spark)
+    val q = many.where(col("id") < 5).withColumn("id", col("id").cast("int"))
+    val got = Knn.bruteForce(many, q, 4, "cosine", excludeSelf = true)
+    assert(KnnSpec.plansKernel(got))
+    val rows = KnnSpec.rows(got)
+    assert(rows.length == 20 && rows.forall(r => r._1 != r._2), rows)
+    assert(rows == KnnSpec.rows(
+      KnnSpec.expressionArm(many, q, 4, "cosine", excludeSelf = true)))
+  }
+
+  test("excludeSelf with string ids, null ids and a null query vector") {
+    val sdocs = Seq(("a", Seq(1.0, 0.0)), ("b", Seq(0.9, 0.1)),
+      ("c", Seq(0.0, 1.0)), (null, Seq(1.0, 0.01)))
+      .toDF("id", "embedding")
+    val sq = Seq(("a", Seq(1.0, 0.0)), ("c", null), (null, Seq(0.0, 1.0)))
+      .toDF("id", "embedding")
+    for (ex <- Seq(true, false)) {
+      val got = KnnSpec.rows(Knn.bruteForce(sdocs, sq, 3, "cosine", excludeSelf = ex))
+      assert(got == KnnSpec.rows(
+        KnnSpec.expressionArm(sdocs, sq, 3, "cosine", excludeSelf = ex)), s"excludeSelf=$ex")
+      if (ex) assert(got.map(r => (r._1, r._2)) ==
+        Seq[(Any, Any)](("a", "b"), ("a", "c")), got)
+    }
+  }
+
+  test("an unknown metric fails loudly on every exact and blocked path") {
+    val many = KnnSpec.gridDocs(spark)
+    val q = many.where(col("id") < 3)
+    val e1 = intercept[IllegalArgumentException](Knn.bruteForce(many, q, 3, "l2"))
+    assert(e1.getMessage.contains("'l2'"))
+    val e2 = intercept[IllegalArgumentException](
+      Knn.bruteForceLargeQ(many, q, 3, "l2", nBlocks = 2))
+    assert(e2.getMessage.contains("'l2'"))
+    val idx = Ann.ivfBuild(many, "id", "embedding", nCells = 4, seed = 3)
+    val e3 = intercept[Exception](
+      Ann.ivfSearchBlocked(idx, q, 3, metric = "l2").collect())
+    val msgs = Iterator.iterate[Throwable](e3)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("unknown metric 'l2'")), msgs)
+  }
+
+  test("mismatched dimensions: kernel and expression arm agree on the common prefix") {
+    val d4 = Seq((1L, Seq(1.0f, 0.0f, 0.0f, 5.0f)), (2L, Seq(0.0f, 1.0f, 0.0f, 0.0f)),
+      (3L, Seq(1.0f, 0.1f, 0.0f, 0.0f))).toDF("id", "embedding")
+    val q3 = Seq((0L, Seq(1.0f, 0.0f, 0.0f))).toDF("id", "embedding")
+    for (m <- Seq("cosine", "euclidean", "sqeuclidean", "inner_product")) {
+      val got = KnnSpec.rows(Knn.bruteForce(d4, q3, 3, m))
+      assert(got == KnnSpec.rows(KnnSpec.expressionArm(d4, q3, 3, m)), m)
+    }
+    // cosine over the common prefix: doc 1 equals the query there
+    val cos = KnnSpec.rows(Knn.bruteForce(d4, q3, 3, "cosine"))
+    assert(cos.head == ((0L, 1L, 1, 0.0)), cos)
+    assert(cos(1)._2 == 3L, cos)
   }
 
   test("large-Q block-split returns identical results to single broadcast") {
@@ -222,20 +270,16 @@ class KnnSpec extends SparkSuite {
     assert(inverse == normal.reverse)
   }
 
-  test("custom KnnJoin plan: same results as bruteForce, KnnJoinExec in plan") {
+  test("plain session plans KnnTopKExec: same results as the expression arm") {
     val many = spark.range(300).select(
       col("id"), transform(sequence(lit(0), lit(7)),
         i => sin((col("id") + 1) * (i + 1)).cast("float")).as("embedding"))
     val q = many.where(col("id") < 4)
-    val viaPlan = Knn.knnJoin(many, q, 6, "cosine", excludeSelf = true)
-    // physical nodes print without the Exec suffix; check the node type
-    assert(viaPlan.queryExecution.executedPlan.collectFirst {
-      case p: graft.plans.KnnJoinExec => p
-    }.isDefined)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "id", "rank").orderBy("query_id", "rank")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(key(viaPlan) == key(Knn.bruteForce(many, q, 6, "cosine", excludeSelf = true)))
+    // the suite session is built without GraftExtensions
+    val viaPlan = Knn.bruteForce(many, q, 6, "cosine", excludeSelf = true)
+    assert(KnnSpec.plansKernel(viaPlan))
+    assert(KnnSpec.rows(viaPlan) ==
+      KnnSpec.rows(KnnSpec.expressionArm(many, q, 6, "cosine", excludeSelf = true)))
     // downstream composition over the custom node works
     assert(viaPlan.groupBy("query_id").count().count() == 4)
   }
@@ -537,21 +581,18 @@ class KnnSpec extends SparkSuite {
       f(dup.repartition(parts))
         .select("query_id", "id", "rank").orderBy("query_id", "rank")
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
-    // aggregate path
+    // KnnTopKExec kernel
     def agg(d: org.apache.spark.sql.DataFrame) =
       Knn.bruteForce(d, q, 7, "cosine", excludeSelf = true)
     val ref = run(agg, 1)
     assert(run(agg, 7) == ref)
     assert(run(agg, 32) == ref)
-    // blocked kernel path
-    def blocked(d: org.apache.spark.sql.DataFrame) =
-      Knn.bruteForceBlocked(d, q, 7, "cosine", excludeSelf = true)
-    assert(run(blocked, 1) == ref)
-    assert(run(blocked, 7) == ref)
-    // custom-plan path
-    def viaPlan(d: org.apache.spark.sql.DataFrame) =
-      Knn.knnJoin(d, q, 7, "cosine", excludeSelf = true)
-    assert(run(viaPlan, 7) == ref)
+    // expression arm
+    def exprArm(d: org.apache.spark.sql.DataFrame) =
+      KnnSpec.expressionArm(d, q, 7, "cosine", excludeSelf = true)
+    assert(run(exprArm, 1) == ref)
+    assert(run(exprArm, 7) == ref)
+    assert(run(exprArm, 32) == ref)
     // and the tie order itself is ascending by id within equal distance
     ref.sliding(2).foreach { case Seq((_, id1, r1), (_, id2, r2)) =>
       assert(r1 < r2)
@@ -658,5 +699,49 @@ class KnnSpec extends SparkSuite {
     // a corpus smaller than k+1 yields no scores (D^k undefined)
     val tiny = docs.where(col("id") < 4)
     assert(Knn.outlierScores(tiny, k = 5, idCol = "id").count() == 0)
+  }
+}
+
+object KnnSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** The expression arm of exact knn — cross join, `vector_distance` per
+    * pair, `topk_by_distance` — as the independent reference. */
+  def expressionArm(docs: DataFrame, queries: DataFrame, k: Int, m: String,
+      excludeSelf: Boolean = false): DataFrame =
+    Knn.bruteForceCustom(docs, queries, k, vector_distance(_, _, m),
+      excludeSelf = excludeSelf)
+
+  /** True when the executed plan (through AQE) runs the KnnTopKExec kernel. */
+  def plansKernel(df: DataFrame): Boolean =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .find(df.queryExecution.executedPlan)(
+        _.isInstanceOf[graft.plans.KnnTopKExec]).isDefined
+
+  /** (query_id, id, rank, distance), in (query_id, rank) order. */
+  def rows(df: DataFrame): Seq[(Any, Any, Int, Double)] =
+    df.select("query_id", "id", "rank", "distance").collect()
+      .map(r => (r.get(0), r.get(1), r.getInt(2), r.getDouble(3))).toSeq
+      .sortBy(r => (String.valueOf(r._1), r._3))
+
+  def gridDocs(s: SparkSession): DataFrame =
+    s.range(500).select(
+      col("id"), transform(sequence(lit(0), lit(7)),
+        i => sin((col("id") + 1) * (i + 1)).cast("float")).as("embedding"))
+
+  /** Kernel against expression arm, row for row and bit for bit, over
+    * metrics × excludeSelf × doc partition counts; one line per miss. */
+  def gridMismatches(s: SparkSession): Seq[String] = {
+    val many = gridDocs(s)
+    val q = many.where(col("id") < 5)
+    for (m <- Seq("cosine", "euclidean", "sqeuclidean", "inner_product");
+         ex <- Seq(true, false); parts <- Seq(1, 7, 32);
+         d = many.repartition(parts);
+         kernel = Knn.bruteForce(d, q, 7, m, excludeSelf = ex);
+         got = rows(kernel);
+         want = rows(expressionArm(d, q, 7, m, excludeSelf = ex))
+         if !plansKernel(kernel) || got.length != 35 || got != want)
+      yield s"$m excludeSelf=$ex parts=$parts: kernel=${plansKernel(kernel)} " +
+        s"got ${got.take(3)} want ${want.take(3)}"
   }
 }

@@ -7,8 +7,8 @@ import graft.operators.Knn
 
 /** Exact knn over every vector column type a caller can hand in: element
   * nullability × {float, double}, with and without [[GraftExtensions]]
-  * (whose rewrite plans the `KnnTopKExec` kernel), each against a
-  * plain-JVM cosine scan. */
+  * (the `KnnTopKExec` kernel plans on both), each against a plain-JVM
+  * cosine scan. */
 class KnnVectorTypesSpec extends SparkSuite {
 
   private val n = 64
@@ -48,15 +48,12 @@ class KnnVectorTypesSpec extends SparkSuite {
     s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  private def check(s: SparkSession, rewrite: Boolean): Unit =
+  private def check(s: SparkSession, extensions: Boolean): Unit =
     for (float <- Seq(true, false); containsNull <- Seq(true, false)) {
       val df = docs(s, float, containsNull)
       val got = Knn.bruteForce(df, df, k, "cosine", excludeSelf = true)
-      val fired = got.queryExecution.optimizedPlan.collectFirst {
-        case p: graft.plans.KnnTopK => p
-      }.isDefined
-      val what = s"float=$float containsNull=$containsNull rewrite=$rewrite"
-      assert(fired == rewrite, s"KnnTopK rewrite fired=$fired: $what")
+      val what = s"float=$float containsNull=$containsNull extensions=$extensions"
+      assert(KnnSpec.plansKernel(got), s"no KnnTopKExec: $what")
       val rows = got.select("query_id", "id", "distance", "rank").collect()
       assert(rows.length == n * k, what)
       rows.foreach { r =>
@@ -68,7 +65,7 @@ class KnnVectorTypesSpec extends SparkSuite {
     }
 
   test("exact knn matches a JVM cosine scan for every vector type, extensions off") {
-    check(spark, rewrite = false)
+    check(spark, extensions = false)
   }
 
   test("exact knn matches a JVM cosine scan for every vector type, extensions on") {
@@ -80,7 +77,7 @@ class KnnVectorTypesSpec extends SparkSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
-      check(s2, rewrite = true)
+      check(s2, extensions = true)
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)
